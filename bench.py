@@ -73,8 +73,10 @@ ships with ``all_attempts_host_tainted: true``. No shipped key changed.
 from __future__ import annotations
 
 import gc
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -93,6 +95,18 @@ TIME_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1500"))
 # "checksum" (default, r11): force every output column through the plan;
 # "count": the legacy consumer (Catalyst may prune subtrees — A/B only).
 CONSUMER = os.environ.get("SPARK_GRAFT_BENCH_CONSUMER", "checksum")
+
+
+def latest_reference(directory: str) -> str | None:
+    """Path of the committed ``BENCH_r<N>_reference.json`` with the highest
+    round number N, or None. Chosen numerically: a lexicographic sort
+    puts ``r9`` after ``r10`` (and ``r99`` after ``r100``)."""
+    rounds = {}
+    for path in glob.glob(os.path.join(directory, "BENCH_r*_reference.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)_reference\.json", os.path.basename(path))
+        if m:
+            rounds[int(m.group(1))] = path
+    return rounds[max(rounds)] if rounds else None
 
 
 def reference_regime_flags(ref: dict, consumer: str = None) -> dict:
@@ -395,18 +409,9 @@ def main() -> None:
     HOST_SCALE_BAR = 1.25
     _ref_canary_min = None
     try:
-        import glob as _g
-
-        _reffiles = sorted(
-            _g.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*_reference.json",
-                )
-            )
-        )
-        if _reffiles:
-            with open(_reffiles[-1]) as _f:
+        _reffile = latest_reference(os.path.dirname(os.path.abspath(__file__)))
+        if _reffile:
+            with open(_reffile) as _f:
                 _ref_canary_min = json.load(_f).get("canary_min")
     except (OSError, ValueError):
         _ref_canary_min = None
@@ -496,19 +501,10 @@ def main() -> None:
     # paragraph arguing three +8-12% medians were drift — this makes that
     # call mechanical). Full table in BENCH_DETAIL.json; the lean line
     # carries only the worst few ratios.
-    import glob as _glob
-
-    _refs = sorted(
-        _glob.glob(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_r*_reference.json",
-            )
-        )
-    )
-    if _refs and chosen["sf"] == 0.1:
+    _ref_path = latest_reference(os.path.dirname(os.path.abspath(__file__)))
+    if _ref_path and chosen["sf"] == 0.1:
         try:
-            with open(_refs[-1]) as f:
+            with open(_ref_path) as f:
                 _ref = json.load(f)
             _ours = {
                 q: d["min"] for q, d in chosen.get("dispersion", {}).items()
@@ -550,7 +546,7 @@ def main() -> None:
                         d["ratio_norm"] = round(d["ratio"] / host_scale, 3)
                     deltas[q] = d
             chosen["min_vs_reference"] = {
-                "file": os.path.basename(_refs[-1]),
+                "file": os.path.basename(_ref_path),
                 "host_scale": host_scale,
                 "deltas": deltas,
             }

@@ -25,6 +25,7 @@ from graphdb_neo4j_spark.operators import ingest
 from graphdb_neo4j_spark.operators.fuzzy import fuzzy_search
 from graphdb_neo4j_spark.operators.recommend import recommend
 from graphdb_neo4j_spark.operators.relationship import two_name_relationship
+from graphdb_neo4j_spark.session import local_rows
 from graphdb_neo4j_spark.sources.tpch import customer_nodes, full_nodes
 
 # --- boundary types (the reference's Pydantic models, student_service.py
@@ -102,7 +103,8 @@ class GraphService:
         base = customer_nodes(self.spark, self.sf_dir)
         if not self._overlay:
             return base
-        extra = self.spark.createDataFrame(
+        extra = local_rows(
+            self.spark,
             [(i, n, a, c, b, s) for (i, n, a, c, b, s, _) in self._overlay],
             "id long, name string, address string, college string,"
             " board string, stream string",
@@ -226,7 +228,8 @@ class GraphService:
         student_service.py:62-106), via the broadcast incremental plan."""
         from graphdb_neo4j_spark.sources.tpch import customer_interest_pairs
 
-        batch = self.spark.createDataFrame(
+        batch = local_rows(
+            self.spark,
             [(i, n, a, c, b, s, list(t)) for (i, n, a, c, b, s, t) in self._overlay],
             "id long, name string, address string, college string,"
             " board string, stream string, interests array<string>",

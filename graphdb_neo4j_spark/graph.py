@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.session import local_rows
+
 NODE_COLUMNS = ["id", "name", "address", "college", "board", "stream", "interests"]
 EDGE_COLUMNS = ["src", "dst", "type", "common"]
 
@@ -106,6 +108,4 @@ class PropertyGraph:
 
 def empty_edges(spark) -> DataFrame:
     """A zero-row, correctly-typed edges DataFrame."""
-    return spark.createDataFrame(
-        [], schema="src long, dst long, type string, common array<string>"
-    )
+    return local_rows(spark, [], "src long, dst long, type string, common array<string>")

@@ -46,8 +46,9 @@ from graphdb_neo4j_spark.sources.tpch import (
     NODES_CTE,
     customer_interest_pairs_raw,
     customer_nodes,
+    load_table,
 )
-from graphdb_neo4j_spark.session import materialize
+from graphdb_neo4j_spark.session import local_rows, materialize
 
 # Deterministic demo ingest batch (mixed case / stray whitespace on purpose
 # — the route-level lowercase invariant must normalize it). Interests are
@@ -61,6 +62,13 @@ DEMO_SCHEMA = (
     "name string, address string, college string, board string, stream string,"
     " interests array<string>"
 )
+
+# Largest interest-token set pushed into the lineitem scan as an
+# ``In(l_partkey, ...)`` literal list. The list is inlined in every plan
+# the batch feeds, and a large onboard batch can carry ~10^5 distinct
+# tokens. Above the cap the scan stays unpruned: the semi join on the
+# batch's tokens keeps the same rows, so the derived edges are identical.
+PART_KEY_PUSHDOWN_CAP = 1000
 
 
 def normalize_batch(new_raw: DataFrame) -> DataFrame:
@@ -195,8 +203,8 @@ def ingest_students(
     # (probe union, broadcast side, interest explode), each
     # un-materialized use re-ran that scan (audit: 6 node-table scans
     # per onboard). The batch originated on the driver, so collapse it
-    # back to a k-row literal: ONE max-id job, zero lineage, no
-    # checkpoint barrier.
+    # back to driver rows: ONE max-id job, zero lineage, no checkpoint
+    # barrier.
     allocated = allocate_ids(nodes, normalize_batch(new_raw))
     # Lineage cut: ONE bounded job decides the route AND fetches the
     # small-batch rows — take(ceiling+1) early-stops once it has enough
@@ -204,26 +212,29 @@ def ingest_students(
     # collect() was silently unbounded) and interactive batches (the
     # reference's POST /students shape) pay a single job instead of the
     # r6 eager-checkpoint + count + collect triple. Small batches
-    # collapse to a driver-side literal — zero lineage, no re-scan for
-    # the several consumers below. Only genuinely large onboard batches
-    # pay a second job to materialize on the executors (plain
-    # localCheckpoint there trades recompute-on-executor-loss for the
-    # lineage cut; a lost executor mid-onboard is the rerun-the-batch
-    # case operationally anyway).
+    # return to the JVM as a LocalRelation (:func:`local_rows`) — zero
+    # lineage, no re-scan and no Python worker for the several consumers
+    # below. Only genuinely large onboard batches pay a second job to
+    # materialize on the executors (plain localCheckpoint there trades
+    # recompute-on-executor-loss for the lineage cut; a lost executor
+    # mid-onboard is the rerun-the-batch case operationally anyway).
     _ROUNDTRIP_CEILING = 100_000
     head = allocated.take(_ROUNDTRIP_CEILING + 1)
     if len(head) <= _ROUNDTRIP_CEILING:
-        batch = spark.createDataFrame(head, allocated.schema)
+        batch = local_rows(spark, head, allocated.schema)
         # r14: the batch is ON THE DRIVER, so its interest-token universe
         # is known before any plan is built — push it into the lineitem
         # SCAN as an integer In() predicate (guide §6: the downstream
         # semi join on the derived string column filters after the fact
         # join; this prunes before it). Tokens that are not integer part
         # keys can never equal cast(l_partkey as string), so dropping
-        # them reads nothing the semi join would have kept.
+        # them reads nothing the semi join would have kept. Above
+        # PART_KEY_PUSHDOWN_CAP keys the scan stays unpruned.
         toks = sorted({t for r in head for t in (r["interests"] or [])})
         pk = [int(t) for t in toks if t.isdigit()]
-        existing_pairs = customer_interest_pairs_raw(spark, sf_dir, part_keys=pk)
+        existing_pairs = customer_interest_pairs_raw(
+            spark, sf_dir, part_keys=pk if len(pk) <= PART_KEY_PUSHDOWN_CAP else None
+        )
     else:
         batch = allocated.transform(materialize, eager=True)
         existing_pairs = customer_interest_pairs_raw(spark, sf_dir)
@@ -239,11 +250,11 @@ def q_ingest_students(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-ingest verification: per-type count of the NEW edges created by
     onboarding the demo batch (every edge type exercised; zero-count types
     kept so the row set is schema-stable)."""
-    new_raw = spark.createDataFrame(DEMO_STUDENTS, DEMO_SCHEMA)
+    new_raw = local_rows(spark, DEMO_STUDENTS, DEMO_SCHEMA)
     _, new_edges = ingest_students(spark, sf_dir, new_raw)
     counted = new_edges.groupBy("type").agg(F.count("*").alias("n_edges"))
-    types = spark.createDataFrame(
-        [(t,) for t in [*ATTRIBUTE_EDGE_TYPES, INTEREST_EDGE_TYPE]], "type string"
+    types = local_rows(
+        spark, [(t,) for t in [*ATTRIBUTE_EDGE_TYPES, INTEREST_EDGE_TYPE]], "type string"
     )
     return types.join(counted, "type", "left").select(
         "type", F.coalesce("n_edges", F.lit(0)).alias("n_edges")
@@ -314,7 +325,7 @@ def q_normalized_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — bulk lowercase/trim over RAW store values (the testdata's
     unprojected customer strings stand in for a store whose invariant
     drifted, the exact situation sync_lowercase_students repairs)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = load_table(spark, sf_dir, "customer")
     raw = customer.select(
         F.col("c_custkey").cast("long").alias("id"),
         F.col("c_name").alias("name"),
@@ -351,8 +362,8 @@ def q_create_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = allocate_ids(
         nodes,
         normalize_batch(
-            spark.createDataFrame(
-                [("  Demo User  ", "addr_0", "", "", "", [])], DEMO_SCHEMA
+            local_rows(
+                spark, [("  Demo User  ", "addr_0", "", "", "", [])], DEMO_SCHEMA
             )
         ),
     ).drop("interests")

@@ -11,7 +11,11 @@ joins (SURVEY.md §7.4-H3):
 
 Each iteration is ``localCheckpoint``-ed: the plan would otherwise double in
 depth every hop (lineage growth is the classic iterative-algorithm failure
-mode at scale). The loop breaks as soon as the frontier empties, so the
+mode at scale). The driver-side seeds (source row, empty visited-group
+set, Bellman-Ford start distance) are built with
+:func:`~graphdb_neo4j_spark.session.local_rows`, so they sit in the plan
+as ``LocalRelation`` literals that every hop re-reads without starting a
+Python worker. The loop breaks as soon as the frontier empties, so the
 depth parameter is a cap, not a forced count: :func:`q_bfs_distances`
 bounds it (the Cypher ``[*..n]`` form), :func:`q_bfs_unbounded` runs to
 fixpoint with depth as a pure safety ceiling (the unbounded ``[*]`` form,
@@ -24,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.sources.tpch import NODES_CTE, customer_nodes
-from graphdb_neo4j_spark.session import materialize
+from graphdb_neo4j_spark.session import local_rows, materialize
 
 DEFAULT_MAX_DEPTH = 3
 
@@ -42,7 +46,7 @@ def bfs_distances(
     """(id, dist) for every node within ``max_depth`` hops of ``source_id``
     (minimum hop count; the source itself at dist 0)."""
     spark = edges_undirected.sparkSession
-    visited = spark.createDataFrame([(source_id, 0)], "id long, dist int")
+    visited = local_rows(spark, [(source_id, 0)], "id long, dist int")
     frontier = visited.select("id")
     edges = edges_undirected.select("src", "dst")
 
@@ -155,9 +159,9 @@ def bfs_clique_factored(
         .select("id", "s.g_attr", "s.g_val")
         .transform(materialize)
     )
-    visited = spark.createDataFrame([(source_id, 0)], "id long, dist int")
+    visited = local_rows(spark, [(source_id, 0)], "id long, dist int")
     frontier = visited.select("id")
-    seen_groups = spark.createDataFrame([], "g_attr string, g_val string")
+    seen_groups = local_rows(spark, [], "g_attr string, g_val string")
     # NOTE (r14): a fused per-hop variant (both frames lazy + one count)
     # was built and interleaved-A/B'd at 1.21× — under AQE a lazy
     # checkpoint's toRdd still executes its query stages at call time,
@@ -251,8 +255,8 @@ def shortest_path(
     The parent map stays distributed; only the ≤ max_depth chain nodes are
     ever collected (one point-filter per hop)."""
     spark = edges_undirected.sparkSession
-    visited = spark.createDataFrame(
-        [(source_id, 0, None)], "id long, dist int, parent long"
+    visited = local_rows(
+        spark, [(source_id, 0, None)], "id long, dist int, parent long"
     )
     frontier = visited.select("id")
     edges = edges_undirected.select("src", "dst")
@@ -323,9 +327,7 @@ def weighted_distances(
             F.col("v").alias("u"), F.col("u").alias("v"), weight_col
         )
     ).transform(materialize)
-    dist = spark.createDataFrame(
-        [(source_id, 0.0)], "id long, dist double"
-    ).transform(materialize)
+    dist = local_rows(spark, [(source_id, 0.0)], "id long, dist double")
     for _ in range(max_rounds):
         candidates = (
             both.join(dist.select(F.col("id").alias("u"), "dist"), "u")

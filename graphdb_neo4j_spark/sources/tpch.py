@@ -24,6 +24,9 @@ join orders⋈lineitem, which co-partitions on o_orderkey/l_orderkey.
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,10 +46,63 @@ TABLES = (
 )
 
 
+# Session confs that change what parquet schema inference returns for the
+# same file; a change to any of them re-infers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# session → {path: ((file signature, inference confs), inferred schema)}.
+# Concurrent readers on one session at worst both infer; each store is one
+# complete (stamp, schema) entry.
+_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _file_signature(path: str) -> tuple | None:
+    """(path, mtime_ns, size) of the file, or of every file under a table
+    directory — a rewritten table gets a new signature. None when the
+    path cannot be stat'ed from the driver (remote store, missing file)."""
+    try:
+        files = (
+            sorted(os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs)
+            if os.path.isdir(path)
+            else [path]
+        )
+        stats = [os.stat(f) for f in files]
+        return tuple((f, st.st_mtime_ns, st.st_size) for f, st in zip(files, stats))
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a DataFrame, inferring its schema once
+    per session.
+
+    A plain ``spark.read.parquet`` runs a one-task footer job to infer the
+    schema on every call (~0.1 s warm), and every operator call reads
+    several tables. The inferred schema is remembered per session, keyed
+    by the path, its files' modification times and sizes, and the confs
+    that steer inference; later reads pass it to ``spark.read.schema`` and
+    only list files. A path that cannot be stat'ed is inferred on every
+    read. The schemas are inferred, never declared: the engine does not
+    own the input files' physical types.
+    """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    stamp = (sig, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    memo = _schemas.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (stamp, df.schema)
+    return df
 
 
 def customer_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:

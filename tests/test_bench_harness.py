@@ -43,16 +43,32 @@ def test_committed_reference_recordings_are_stamped():
     # r11 was re-stamped (known-checksum per PLANS.md round-11). Pre-r11
     # recordings are count-era and legitimately unstamped (the guard
     # treats them as unknown, which is the honest answer).
-    import glob
-
-    refs = sorted(glob.glob(os.path.join(REPO, "BENCH_r*_reference.json")))
-    assert refs, "no committed reference recordings found"
-    newest = refs[-1]
+    newest = bench.latest_reference(REPO)
+    assert newest, "no committed reference recordings found"
     with open(newest) as f:
         d = json.load(f)
     assert d.get("consumer") in ("checksum", "count"), (
         f"{os.path.basename(newest)} lacks a consumer stamp — the regime "
         "guard will report unknown on every run"
+    )
+
+
+def test_reference_chosen_by_round_number(tmp_path):
+    # A lexicographic sort puts r9 after r10 and r99 after r100; the
+    # newest reference is the highest round number. Non-reference
+    # recordings beside them are ignored.
+    assert bench.latest_reference(str(tmp_path)) is None
+    for name in ("BENCH_r9_reference.json", "BENCH_r10_reference.json",
+                 "BENCH_r99_reference.json", "BENCH_r100_reference.json",
+                 "BENCH_r200.json", "BENCH_r300_c8.json"):
+        (tmp_path / name).write_text("{}")
+    assert os.path.basename(bench.latest_reference(str(tmp_path))) == (
+        "BENCH_r100_reference.json"
+    )
+    (tmp_path / "BENCH_r100_reference.json").unlink()
+    (tmp_path / "BENCH_r99_reference.json").unlink()
+    assert os.path.basename(bench.latest_reference(str(tmp_path))) == (
+        "BENCH_r10_reference.json"
     )
 
 
