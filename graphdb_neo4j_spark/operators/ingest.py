@@ -63,13 +63,6 @@ DEMO_SCHEMA = (
     " interests array<string>"
 )
 
-# Largest interest-token set pushed into the lineitem scan as an
-# ``In(l_partkey, ...)`` literal list. The list is inlined in every plan
-# the batch feeds, and a large onboard batch can carry ~10^5 distinct
-# tokens. Above the cap the scan stays unpruned: the semi join on the
-# batch's tokens keeps the same rows, so the derived edges are identical.
-PART_KEY_PUSHDOWN_CAP = 1000
-
 
 def normalize_batch(new_raw: DataFrame) -> DataFrame:
     """Route-level ingest normalization (student_routes.py:28-32): every
@@ -228,13 +221,10 @@ def ingest_students(
         # semi join on the derived string column filters after the fact
         # join; this prunes before it). Tokens that are not integer part
         # keys can never equal cast(l_partkey as string), so dropping
-        # them reads nothing the semi join would have kept. Above
-        # PART_KEY_PUSHDOWN_CAP keys the scan stays unpruned.
+        # them reads nothing the semi join would have kept.
         toks = sorted({t for r in head for t in (r["interests"] or [])})
         pk = [int(t) for t in toks if t.isdigit()]
-        existing_pairs = customer_interest_pairs_raw(
-            spark, sf_dir, part_keys=pk if len(pk) <= PART_KEY_PUSHDOWN_CAP else None
-        )
+        existing_pairs = customer_interest_pairs_raw(spark, sf_dir, part_keys=pk)
     else:
         batch = allocated.transform(materialize, eager=True)
         existing_pairs = customer_interest_pairs_raw(spark, sf_dir)

@@ -189,12 +189,19 @@ def local_rows(spark, rows, schema):
     ``LocalRelation``: no Python worker, constant-folded by the optimizer
     (an empty relation prunes its joins), sized for broadcast planning.
     Meant for driver-sized inputs — seeds, request overlays, ingest
-    batches — which the plan carries inline."""
+    batches — which the plan carries inline.
+
+    ``TimestampType`` fields (at any depth) raise ``TypeError``: Arrow
+    reads a naive ``datetime`` as UTC, where the list path reads it in
+    the session time zone, so such rows would be silently shifted. Use
+    ``TimestampNTZType`` or ``createDataFrame`` for them."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    if _has_timestamp(struct):
+        raise TypeError(f"local_rows does not take TimestampType fields: {struct.simpleString()}")
     arrow_schema = to_arrow_schema(struct)
     columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
     table = pa.Table.from_arrays(
@@ -202,6 +209,20 @@ def local_rows(spark, rows, schema):
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+def _has_timestamp(dtype) -> bool:
+    from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
+
+    if isinstance(dtype, TimestampType):
+        return True
+    if isinstance(dtype, StructType):
+        return any(_has_timestamp(f.dataType) for f in dtype.fields)
+    if isinstance(dtype, ArrayType):
+        return _has_timestamp(dtype.elementType)
+    if isinstance(dtype, MapType):
+        return _has_timestamp(dtype.keyType) or _has_timestamp(dtype.valueType)
+    return False
 
 
 def adaptive_stream_shuffle_partitions(df) -> int:

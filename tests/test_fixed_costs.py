@@ -81,6 +81,16 @@ def test_local_rows_without_arrow_conf(spark):
     assert df.collect()[0]["dist"] == 0
 
 
+@pytest.mark.parametrize(
+    "schema", ["t timestamp", "id long, ts array<timestamp>", "s struct<t: timestamp>"]
+)
+def test_local_rows_refuses_timestamps(spark, schema):
+    # Arrow would read a naive datetime as UTC; the list path reads it in
+    # the session time zone. Refuse rather than shift the values.
+    with pytest.raises(TypeError, match="TimestampType"):
+        local_rows(spark, [], schema)
+
+
 def test_overlay_nodes_have_no_rdd(spark, sf_dir):
     svc = GraphService(spark, sf_dir)
     new_id = svc.save_student(

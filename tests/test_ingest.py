@@ -62,14 +62,18 @@ def test_create_node_appends_one_row(spark, sf_dir):
     assert ingest.create_node(nodes, row).count() == nodes.count() + 1
 
 
-def test_part_key_pushdown_cap(spark, sf_dir, monkeypatch):
-    """The batch's part keys reach the lineitem scan as an In() literal
-    only up to PART_KEY_PUSHDOWN_CAP; above it the scan is unpruned. The
-    derived edges are the same on both sides of the cap."""
-    n_keys = len({t for *_, toks in ingest.DEMO_STUDENTS for t in toks})
+def test_part_key_pushdown_keeps_edges(spark, sf_dir, monkeypatch):
+    """The batch's part keys reach the lineitem scan as an In() literal.
+    The derived edges equal those from the unpruned scan."""
+    unpruned_pairs = ingest.customer_interest_pairs_raw
 
-    def run(cap):
-        monkeypatch.setattr(ingest, "PART_KEY_PUSHDOWN_CAP", cap)
+    def run(pushed):
+        if not pushed:
+            monkeypatch.setattr(
+                ingest,
+                "customer_interest_pairs_raw",
+                lambda spark, sf_dir, part_keys=None: unpruned_pairs(spark, sf_dir),
+            )
         new_raw = spark.createDataFrame(ingest.DEMO_STUDENTS, ingest.DEMO_SCHEMA)
         _, edges = ingest.ingest_students(spark, sf_dir, new_raw)
         plan = edges._jdf.queryExecution().executedPlan().toString()
@@ -78,7 +82,7 @@ def test_part_key_pushdown_cap(spark, sf_dir, monkeypatch):
         )
         return "In(l_partkey" in plan, rows
 
-    pushed_at_cap, at_cap = run(n_keys)
-    pushed_above, above_cap = run(n_keys - 1)
-    assert pushed_at_cap and not pushed_above
-    assert at_cap == above_cap and len(at_cap) > 0
+    pushed, with_pushdown = run(True)
+    pruned_away, without = run(False)
+    assert pushed and not pruned_away
+    assert with_pushdown == without and len(without) > 0
